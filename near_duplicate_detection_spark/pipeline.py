@@ -21,9 +21,13 @@ bucket-size ceiling. Stage 3 shuffles only the duplicate-pair edge set.
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +38,7 @@ from near_duplicate_detection_spark.functions.signatures import (
     signature_map_fn,
 )
 from near_duplicate_detection_spark.lineage import StageCatalog
+from near_duplicate_detection_spark.operators import mor
 from near_duplicate_detection_spark.operators.connected_components import (
     clusters_table,
     connected_components,
@@ -60,6 +65,28 @@ def _wrap64(x: int) -> int:
     driver-side half of the decimal-accumulated checksum algebra."""
     x &= (1 << 64) - 1
     return x - (1 << 64) if x >= (1 << 63) else x
+
+
+def _bucket_stats(df: DataFrame, *extra):
+    """ONE job: per-bucket (rows, Σ xxhash64(url, text) mod 2^64) of a
+    bucket-tagged (url, text) frame — the stage-0 lineage algebra — plus
+    any ``extra`` aggregates. Returns ``({bucket: (rows, checksum)},
+    collected_rows)``."""
+    got = (
+        df.groupBy("bucket")
+        .agg(
+            F.count("*").alias("rows"),
+            F.sum(F.xxhash64("url", "text").cast("decimal(38,0)")).alias(
+                "cks"
+            ),
+            *extra,
+        )
+        .collect()
+    )
+    stats = {
+        int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"]))) for r in got
+    }
+    return stats, got
 
 
 class NDDPipeline:
@@ -92,9 +119,8 @@ class NDDPipeline:
         # by-product of _try_pure_append's identity aggregate — consumed by
         # run_incremental's slow path so stage0_ingest's resume scan does
         # not re-evaluate the snapshot for the identical numbers (the probe
-        # sums the same count / decimal xxhash64 expressions per bucket;
-        # exactness relies on the corpus url-uniqueness invariant the
-        # probe's own identity algebra already assumes). Never persisted;
+        # sums the same count / decimal xxhash64 expressions per bucket, and
+        # stashes nothing when its probe join multiplied rows). Never persisted;
         # valid only for the snapshot of the run_incremental call in flight.
         self._inferred_stats: dict[int, tuple[int, int]] | None = None
 
@@ -133,22 +159,7 @@ class NDDPipeline:
         controlling page text would need a 2^64-work multiset-sum collision
         — impractical, and crawl pipelines don't face adversarial inputs at
         that precision. (Round-2 used the top 32 bits only: 2^-32.)"""
-        rows = (
-            pages.select(
-                self._bucket_expr().alias("bucket"),
-                F.xxhash64("url", "text").alias("h"),
-            )
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("checksum"),
-            )
-            .collect()
-        )
-        return {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["checksum"])))
-            for r in rows
-        }
+        return _bucket_stats(pages.withColumn("bucket", self._bucket_expr()))[0]
 
     def stage0_ingest(
         self,
@@ -629,8 +640,6 @@ class NDDPipeline:
         # (r6: wipes moved ahead of the compute chain so the overlapped
         # `seen` write can start immediately — same crash argument, the
         # conservative window is merely wider.)
-        import shutil as _shutil
-
         wipe = ["window_index", "seen_2b", *self._STAGE3_LOG_TABLES]
         if self._retract_inflight():
             # a crashed retraction may also have mutated substring_pairs
@@ -641,7 +650,7 @@ class NDDPipeline:
             "substring_pairs"
         )
         for t in wipe:
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
+            shutil.rmtree(cat.path(t), ignore_errors=True)
         # column-prune BEFORE the fp join: stage 2 only ever uses url+bands
         # (LSH) and url+simhash (fallback) — shipping the 128-perm minhash
         # array through the exact-group shuffles would 5× the bytes for
@@ -658,8 +667,6 @@ class NDDPipeline:
         # the stage-2 PARAM hash so the delta path can reject state built
         # under different parameters. At Iceberg scale this is a snapshot
         # id + table property, not a table.
-        from concurrent.futures import ThreadPoolExecutor
-
         pool = ThreadPoolExecutor(max_workers=2)
         try:
             fut_seen = pool.submit(
@@ -747,14 +754,14 @@ class NDDPipeline:
             # AFTER the writes (not in the wipe list above): a crash
             # between wipe and rebuild would have left stale governed
             # tables with their patch gone.
-            _shutil.rmtree(cat.path("retract_patch"), ignore_errors=True)
+            shutil.rmtree(cat.path("retract_patch"), ignore_errors=True)
         wall_ms = int((time.monotonic() - t0) * 1000)
         n_pairs = cat.count_rows("pairs")
         cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
         # the committed rebuild supersedes any crashed retraction or delta
         # append — only HERE are the crash markers cleared (every delta
         # entry point refuses while either is up)
-        self._clear_retract_inflight()
+        self._clear_marker("retract.inflight")
         self._clear_marker("delta.inflight")
         cat.add_metrics(
             "pairs",
@@ -889,99 +896,98 @@ class NDDPipeline:
         old_rep_sigs = reps_tbl.select("url", "bands", "simhash")
         cands, flagged = delta_lsh_candidates(old_rep_sigs, new_reps, cfg)
         cands = cands.localCheckpoint()
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=5) as pool:
-            self._stage2_apply_append_tail(
-                pool, cat, cfg, cands, flagged, exact_edges, new_sigs,
-                new_reps, n_new, h, t0,
+        def appended_pairs() -> DataFrame:
+            sets = candidate_shingle_sets(
+                cands, self.pages_table(), cfg
+            ).localCheckpoint()
+            # materialized ONCE: the log and the table append both read it
+            pairs = (
+                verify_pairs(cands, sets, cfg)
+                .unionByName(exact_edges)
+                .localCheckpoint()
             )
+            # stash this run's edge keys for stage2b_delta's prune: on the
+            # threaded path every VISIBLE prior edge touching a new url is
+            # by construction in this set (new urls have no earlier visible
+            # edges — appends are genuinely new, and updates' old edges are
+            # retraction-governed before this append runs)
+            self._appended_edges = pairs.select("url_a", "url_b")
+            return pairs
+
+        self._commit_delta(
+            "pairs", h, t0, n_new, flagged, appended_pairs,
+            (
+                lambda: cat.write(
+                    new_sigs.select("url"), "urls_new", mode="append"
+                ),
+                lambda: cat.write(
+                    self._stamp_era(
+                        new_reps.select("url", "fp", "bands", "simhash")
+                    ),
+                    "reps",
+                    mode="append",
+                ),
+                lambda: cat.write(
+                    self._stamp_era(
+                        new_sigs.select("url", "fp").withColumn(
+                            "cfg_hash", F.lit(cfg.stage2_hash())
+                        )
+                    ),
+                    "seen",
+                    mode="append",
+                ),
+            ),
+            keys=("verified_pairs", "flagged_buckets"),
+        )
         return new_reps.select("url")
 
-    def _stage2_apply_append_tail(
-        self, pool, cat, cfg, cands, flagged, exact_edges, new_sigs,
-        new_reps, n_new, h, t0,
+    def _commit_delta(
+        self, table, h, t0, n_new, flagged, compute, side_writes, keys
     ) -> None:
-        """Compute/write tail of ``_stage2_apply_append``, run inside its
-        write pool's scope so an exception anywhere still joins the pool."""
-        # the flagged metric only has to COMPLETE before the appends below
-        # mutate the tables its lineage reads from (stale file-listing
-        # hazard) — submit it now so it runs UNDER the shingle-set/verify
-        # chain instead of as a serial step after it (guide §2.6)
-        flagged_future = pool.submit(flagged.count)
-        sets = candidate_shingle_sets(
-            cands, self.pages_table(), cfg
-        ).localCheckpoint()
-        verified = verify_pairs(cands, sets, cfg)
-        # materialize the appended pairs ONCE: two writes consume them
-        # (edges_new log, pairs append) and the verify join must not re-run
-        appended_pairs = verified.unionByName(exact_edges).localCheckpoint()
-        # stash this run's edge keys for stage2b_delta's prune: on the
-        # threaded path every VISIBLE prior edge touching a new url is by
-        # construction in this set (new urls have no earlier visible edges —
-        # appends are genuinely new, and updates' old edges are retraction-
-        # governed before this append runs)
-        self._appended_edges = appended_pairs.select("url_a", "url_b")
-        # the flagged metric must have COMPLETED before the appends below
-        # mutate the tables its lineage reads from (stale file-listing
-        # hazard) — join the overlapped job here
-        n_flagged = flagged_future.result()
-        # marker up across the multi-table appends (no atomic commit): a
-        # crash anywhere below leaves it set, so every later delta entry
-        # refuses and the idempotent full rebuild takes over
-        self._set_marker("delta.inflight")
+        """Commit protocol shared by the stage-2 and stage-2b delta appends.
+        ``compute()`` returns the appended edges (checkpointed ``url_a,
+        url_b, ...`` rows of ``table``); ``side_writes`` are the stage's
+        other appends; ``keys`` name the edge-count and flagged-count
+        metrics.
 
-        # stage-3 append log BEFORE the pairs append: a crash between the
-        # log write and the pairs append leaves an over-complete log (retry
-        # re-appends → the log dedups on read) — the reverse order could
-        # commit pairs whose edges the log never saw, and stage 3's delta
-        # would miss them. That pairwise barrier is the ONLY ordering that
-        # adds a guarantee beyond the marker, so it runs as one chained
-        # task while the other three appends — order-free among themselves
-        # and vs the log (the inflight marker, set above and cleared only
-        # after mark_complete, routes ANY partial combination to the
-        # idempotent full rebuild) — overlap it from the same pool (guide
-        # §2.6; r6: the log write was a serial step ahead of the pool).
-        def log_then_pairs():
-            cat.write(
-                appended_pairs.select("url_a", "url_b"),
-                "edges_new",
-                mode="append",
-            )
-            cat.write(self._stamp_era(appended_pairs), "pairs", mode="append")
+        The ``flagged`` metric job runs UNDER ``compute`` (guide §2.6) and
+        must COMPLETE before any append mutates the tables its lineage
+        reads (stale file-listing hazard). Then ``delta.inflight`` goes up
+        across the multi-table appends (no atomic commit): a crash anywhere
+        below leaves it set, every later delta entry refuses and the
+        idempotent full rebuild takes over. The stage-3 log ``edges_new``
+        is written BEFORE ``table`` — over-logging is safe (the log dedups
+        on read), under-logging would let stage 3's delta miss committed
+        edges — and that pairwise barrier is the only ordering beyond the
+        marker, so it runs as one chained task while the side writes,
+        order-free among themselves and vs the log, overlap it from the
+        same pool."""
+        cat = self.catalog
+        with ThreadPoolExecutor(max_workers=2 + len(side_writes)) as pool:
+            flagged_future = pool.submit(flagged.count)
+            edges = compute()
+            n_flagged = flagged_future.result()
+            self._set_marker("delta.inflight")
 
-        writes = (
-            log_then_pairs,
-            lambda: cat.write(new_sigs.select("url"), "urls_new", mode="append"),
-            lambda: cat.write(
-                self._stamp_era(
-                    new_reps.select("url", "fp", "bands", "simhash")
-                ),
-                "reps",
-                mode="append",
-            ),
-            lambda: cat.write(
-                self._stamp_era(
-                    new_sigs.select("url", "fp").withColumn(
-                        "cfg_hash", F.lit(cfg.stage2_hash())
-                    )
-                ),
-                "seen",
-                mode="append",
-            ),
-        )
-        for _ in pool.map(lambda w: w(), writes):
-            pass
+            def log_then_table():
+                cat.write(
+                    edges.select("url_a", "url_b"), "edges_new", mode="append"
+                )
+                cat.write(self._stamp_era(edges), table, mode="append")
+
+            for _ in pool.map(lambda w: w(), (log_then_table, *side_writes)):
+                pass
         wall_ms = int((time.monotonic() - t0) * 1000)
-        n_pairs = cat.count_rows("pairs")
-        cat.mark_complete("pairs", h, {-1: n_pairs}, wall_ms)
+        n = cat.count_rows(table)
+        cat.mark_complete(table, h, {-1: n}, wall_ms)
         self._clear_marker("delta.inflight")
         cat.add_metrics(
-            "pairs",
+            table,
             {
-                "verified_pairs": n_pairs,
+                keys[0]: n,
                 "delta_new_docs": n_new,
-                "flagged_buckets": n_flagged,
+                keys[1]: n_flagged,
                 "wall_ms": wall_ms,
             },
         )
@@ -1001,13 +1007,9 @@ class NDDPipeline:
     # same crash window the marker now brackets exactly.
 
     def _marker_path(self, name: str) -> str:
-        import os
-
         return os.path.join(self.catalog.base_dir, name)
 
     def _marker_up(self, name: str) -> bool:
-        import os
-
         return os.path.exists(self._marker_path(name))
 
     def _set_marker(self, name: str) -> None:
@@ -1015,8 +1017,6 @@ class NDDPipeline:
             f.write("in progress\n")
 
     def _clear_marker(self, name: str) -> None:
-        import os
-
         try:
             os.remove(self._marker_path(name))
         except FileNotFoundError:
@@ -1027,9 +1027,6 @@ class NDDPipeline:
 
     def _retract_inflight(self) -> bool:
         return self._marker_up("retract.inflight")
-
-    def _clear_retract_inflight(self) -> None:
-        self._clear_marker("retract.inflight")
 
     def _delta_suspect(self) -> bool:
         """True when a crashed retraction OR a crashed delta append may have
@@ -1097,8 +1094,6 @@ class NDDPipeline:
         """Atomic counter write: temp file + rename, so a crash mid-write
         can never leave a truncated/empty counter (open('w') truncates at
         open — a kill before the write would otherwise tear the file)."""
-        import os
-
         path = self._marker_path(name)
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
@@ -1122,8 +1117,6 @@ class NDDPipeline:
         shuffles over the table. Every consumer of seen/reps/pairs/
         window_index/seen_2b/substring_pairs must read through this, never
         ``catalog.read(...)`` raw (same contract as ``clusters_view``)."""
-        from near_duplicate_detection_spark.operators import mor
-
         df = self.catalog.read(table)
         patch = mor.patch_agg(self.catalog)
         if patch is None:
@@ -1171,12 +1164,6 @@ class NDDPipeline:
 
         Returns False (nothing touched) when the retraction exceeds
         ``max_retract`` — the broadcast-mapping ceiling."""
-        import shutil as _shutil
-
-        import pandas as pd
-        import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators import mor
         from near_duplicate_detection_spark.operators.delta import (
             relabel_pair_table,
             relabel_url_table,
@@ -1235,8 +1222,7 @@ class NDDPipeline:
             self.spark.sparkContext.parallelize(sorted(mapping.items()), 1),
             schema="url string, new_url string",
         )
-        with open(self._retract_marker_path(), "w") as f:
-            f.write("retraction in progress\n")
+        self._set_marker("retract.inflight")
         if fold:
             # copy-on-write fold: one broadcast-mapped rewrite per stage
             # table, reading through the VIEWS so the stored patch folds in
@@ -1268,7 +1254,7 @@ class NDDPipeline:
                         ).localCheckpoint(),
                         t,
                     )
-            _shutil.rmtree(cat.path(mor.PATCH_TABLE), ignore_errors=True)
+            shutil.rmtree(cat.path(mor.PATCH_TABLE), ignore_errors=True)
             patch_rows = 0
         else:
             patch = mor.compose_patch(stored, mapping, era)
@@ -1307,7 +1293,7 @@ class NDDPipeline:
             pd.DataFrame(sorted(mapping.items()), columns=["url", "new_url"]),
             pa.schema([("url", pa.string()), ("new_url", pa.string())]),
         )
-        self._clear_retract_inflight()
+        self._clear_marker("retract.inflight")
         cat.add_metrics(
             "pairs",
             {
@@ -1343,10 +1329,8 @@ class NDDPipeline:
         # full stage-2 rewrite does (the substring edge set may change
         # wholesale — e.g. ceiling crossings can DROP pairs, which the
         # merge-only stage-3 delta cannot express) → wipe, stage 3 runs full
-        import shutil as _shutil
-
         for t in self._STAGE3_LOG_TABLES:
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
+            shutil.rmtree(cat.path(t), ignore_errors=True)
         cands, flagged, windows = substring_candidates(
             pages, cfg, return_windows=True
         )
@@ -1379,8 +1363,6 @@ class NDDPipeline:
             if cat.exists("reps")
             else pages.select("url")
         )
-        from concurrent.futures import ThreadPoolExecutor
-
         pool = ThreadPoolExecutor(max_workers=2)
         try:
             fut_windows = pool.submit(
@@ -1555,25 +1537,7 @@ class NDDPipeline:
         cands, flagged = delta_window_candidates(
             self.stage_view("window_index"), new_windows, cfg
         )
-        from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            self._stage2b_apply_append_tail(
-                pool, cat, cfg, cands, flagged, new_windows, new_urls,
-                prior_edges, n_new, h, t0,
-            )
-
-    def _stage2b_apply_append_tail(
-        self, pool, cat, cfg, cands, flagged, new_windows, new_urls,
-        prior_edges, n_new, h, t0,
-    ) -> None:
-        """Prune/verify/write tail of ``_stage2b_apply_append``, run inside
-        its write pool's scope so an exception anywhere still joins the
-        pool. The flagged metric only has to COMPLETE before the appends
-        mutate the tables its lineage reads from — submit it now so it runs
-        UNDER the prune + LCS-verify chain instead of as a serial step
-        after it (guide §2.6)."""
-        flagged_future = pool.submit(flagged.count)
         # already-verified pairs (stage 2 or earlier 2b runs) skip the LCS.
         if prior_edges is not None:
             # verified-threaded path: ``prior_edges`` is the SAME run's
@@ -1585,15 +1549,15 @@ class NDDPipeline:
             # would, with zero corpus-edge reads.
             cands = cands.join(
                 F.broadcast(prior_edges), ["url_a", "url_b"], "left_anti"
-            ).localCheckpoint()
+            )
         else:
             # discovery path: covered urls may predate this run, so probe
             # the prior edge tables (corpus-dup-volume-sized) map-side with
             # the broadcast candidate keys, then anti-join the append-sized
             # hit set back — never a shuffle of the edge tables.
-            # ONE materialization fuses candidate generation with the
-            # prune: the unmaterialized cands subplan appears twice in it
-            # (broadcast keys + probe side) but re-derives from the
+            # ONE materialization (below) fuses candidate generation with
+            # the prune: the unmaterialized cands subplan appears twice in
+            # it (broadcast keys + probe side) but re-derives from the
             # checkpointed window buckets — cheaper than the extra barrier
             # a cands-then-prune double checkpoint paid.
             cand_keys = cands.select("url_a", "url_b")
@@ -1607,56 +1571,35 @@ class NDDPipeline:
             prior_hits = edge_tables.join(
                 F.broadcast(cand_keys), ["url_a", "url_b"], "left_semi"
             )
-            # materialized: verify reads cands three times (url set + pair
-            # join), and each read would otherwise re-run the scan above
             cands = cands.join(
                 F.broadcast(prior_hits), ["url_a", "url_b"], "left_anti"
+            )
+
+        def hits() -> DataFrame:
+            # materialized: verify reads the pruned candidates three times
+            # (url set + pair join), and the hits feed two consumers (log +
+            # table append)
+            return verify_substring_pairs(
+                cands.localCheckpoint(), self.pages_table(), cfg
             ).localCheckpoint()
-        hits = verify_substring_pairs(cands, self.pages_table(), cfg)
-        hits = hits.localCheckpoint()  # two consumers: log + table append
-        # must have COMPLETED before the appends below mutate the tables
-        # its lineage reads from (stale file-listing hazard)
-        n_flagged = flagged_future.result()
-        self._set_marker("delta.inflight")
 
-        # stage-3 append log BEFORE the substring_pairs append (same crash
-        # ordering rule as the stage-2 delta: over-logging is safe,
-        # under-logging not) — the only pairwise barrier beyond the marker,
-        # run as one chained task; window_index/seen_2b are order-free (the
-        # inflight marker routes any partial state to the full rebuild) and
-        # overlap it from the same pool (guide §2.6; r6: the log write was
-        # a serial step ahead of the pool).
-        def log_then_table():
-            cat.write(hits.select("url_a", "url_b"), "edges_new", mode="append")
-            cat.write(self._stamp_era(hits), "substring_pairs", mode="append")
-
-        writes = (
-            log_then_table,
-            lambda: cat.write(
-                self._stamp_era(new_windows), "window_index", mode="append"
-            ),
-            lambda: cat.write(
-                self._stamp_era(
-                    new_urls.withColumn("cfg_hash", F.lit(cfg.stage2b_hash()))
+        self._commit_delta(
+            "substring_pairs", h, t0, n_new, flagged, hits,
+            (
+                lambda: cat.write(
+                    self._stamp_era(new_windows), "window_index", mode="append"
                 ),
-                "seen_2b",
-                mode="append",
+                lambda: cat.write(
+                    self._stamp_era(
+                        new_urls.withColumn(
+                            "cfg_hash", F.lit(cfg.stage2b_hash())
+                        )
+                    ),
+                    "seen_2b",
+                    mode="append",
+                ),
             ),
-        )
-        for _ in pool.map(lambda w: w(), writes):
-            pass
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        n = cat.count_rows("substring_pairs")
-        cat.mark_complete("substring_pairs", h, {-1: n}, wall_ms)
-        self._clear_marker("delta.inflight")
-        cat.add_metrics(
-            "substring_pairs",
-            {
-                "substring_pairs": n,
-                "delta_new_docs": n_new,
-                "flagged_window_buckets": n_flagged,
-                "wall_ms": wall_ms,
-            },
+            keys=("substring_pairs", "flagged_window_buckets"),
         )
 
     # ---------- stage 3 ----------
@@ -1690,22 +1633,21 @@ class NDDPipeline:
         # updated table (duplicate url rows). Wipe-first means a crash
         # anywhere after it routes the retry to this full path (no log ⇒
         # delta refuses), whose overwrite is idempotent.
-        import shutil as _shutil
 
         for t in self._STAGE3_LOG_TABLES:
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
+            shutil.rmtree(cat.path(t), ignore_errors=True)
         # the full build recomputes every label from the edge tables, so the
         # merge-on-read patch is superseded — wipe it with the logs (before
         # the write: a stale patch key could collide with a legitimately
         # re-emerging label in the rebuilt table)
-        _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
+        shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
         cat.write(self._stamp_era(clusters), "clusters")
         # tombstones die AFTER the write (not with the remap wipe above):
         # the rebuilt rows carry the current era, which every stored
         # tombstone already fails to govern (era-inert), so a crash in
         # the write→wipe window never resurrects dead rows — while a
         # wipe-first crash would have
-        _shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
+        shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
         self._reset_append_era()  # full rewrite re-bases fragmentation
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("clusters")
@@ -1759,9 +1701,6 @@ class NDDPipeline:
         committed clusters + intact log (retry re-deltas, idempotent) or a
         wiped log (retry falls back to full) — never a stale-but-plausible
         clusters table."""
-        import os
-        import shutil as _shutil
-
         from near_duplicate_detection_spark.operators.delta import (
             cluster_label_delta,
             pairs_touching,
@@ -1973,8 +1912,6 @@ class NDDPipeline:
                     # ceiling-bounded sidecar — zero Spark jobs (a python-
                     # sourced Spark append pays a Python-worker launch per
                     # default partition, ~4 s measured for tiny tables)
-                    import pyarrow as _pa
-
                     era_now = int(self._retract_era())
                     new_tomb = [
                         (u, era_now)
@@ -1991,7 +1928,7 @@ class NDDPipeline:
                         "cluster_tombstones",
                         old_tomb + new_tomb,
                         ["url", "era"],
-                        types=[_pa.string(), _pa.int64()],
+                        types=[pa.string(), pa.int64()],
                     )
                 if new_patch:
                     # driver-side pyarrow write: zero Spark jobs (a python-
@@ -2003,12 +1940,12 @@ class NDDPipeline:
                         ["old_label", "new_label"],
                     )
                 else:
-                    _shutil.rmtree(
+                    shutil.rmtree(
                         cat.path("cluster_remap"), ignore_errors=True
                     )
                 n = cat.count_rows("clusters")  # footer read, no Spark job
                 for t in self._STAGE3_LOG_TABLES:
-                    _shutil.rmtree(cat.path(t), ignore_errors=True)
+                    shutil.rmtree(cat.path(t), ignore_errors=True)
                 wall_ms = int((time.monotonic() - t0) * 1000)
                 cat.mark_complete("clusters", h, {-1: n}, wall_ms)
                 self._bump_append_era()
@@ -2056,7 +1993,7 @@ class NDDPipeline:
             )
         )
         # stage → wipe log → swap (see docstring crash protocol)
-        _shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
+        shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
         cat.write(clusters_next, "clusters_next")
         n_merged = n_remap
         # pure-append runs derive the new-url count from footer counts
@@ -2078,18 +2015,18 @@ class NDDPipeline:
         # entry refuses and the idempotent full rebuild heals.
         self._set_marker("delta.inflight")
         for t in self._STAGE3_LOG_TABLES:
-            _shutil.rmtree(cat.path(t), ignore_errors=True)
+            shutil.rmtree(cat.path(t), ignore_errors=True)
         # the staged table was built from the VIEW, so the patch is folded
         # into it — wipe the sidecar with the logs, before the swap
-        _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
-        _shutil.rmtree(cat.path("clusters"), ignore_errors=True)
+        shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
+        shutil.rmtree(cat.path("clusters"), ignore_errors=True)
         os.rename(cat.path("clusters_next"), cat.path("clusters"))
         # tombstones die AFTER the swap (unlike the remap wipe above): the
         # staged rows carry the current era, which stored tombstones fail
         # to govern (era-inert) — a crash in the swap→wipe window is
         # harmless, while wipe-before-swap would resurrect dead rows in
         # the still-old table
-        _shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
+        shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
         self._reset_append_era()  # rewriting commit re-bases fragmentation
         wall_ms = int((time.monotonic() - t0) * 1000)
         n = cat.count_rows("clusters")
@@ -2334,18 +2271,26 @@ class NDDPipeline:
                 F.sum(dec).alias("cks"),
                 F.sum(F.when(is_new, 1).otherwise(0)).alias("new_rows"),
                 F.sum(F.when(is_new, dec).otherwise(zero)).alias("new_cks"),
+                F.countDistinct("url").alias("urls"),
             )
             .collect()
         )
         totals = {int(r["bucket"]): r for r in agg}
+        if any(int(r["rows"]) != int(r["urls"]) for r in agg):
+            # the left probe join multiplied rows: the pages view holds a
+            # url twice (a broken ``append_pages`` caller contract) or the
+            # snapshot does — no identity below can hold, and the aggregate
+            # is no longer the snapshot's _input_stats, so stash nothing
+            # (stage0_ingest recomputes the stats from the snapshot)
+            return None
         # by-product stash: the aggregate above already IS _input_stats of
         # this (restricted) snapshot — per-bucket count + decimal xxhash64
         # sum, wrapped to mod-2^64 — so when drift forces the slow path,
         # run_incremental hands it to stage0_ingest instead of paying a
         # second full snapshot evaluation for the identical dict (guide
-        # §1.2). The left probe join cannot change multiplicity: the pages
-        # view is url-unique (MOR governance + the url-primary-key caller
-        # contract this probe's identity algebra already relies on).
+        # §1.2). Exact because every bucket's rows equal its distinct urls
+        # (checked above in the same job), so the probe join matched each
+        # snapshot row at most once.
         self._inferred_stats = {
             b: (int(r["rows"]), _wrap64(int(r["cks"])))
             for b, r in totals.items()
@@ -2464,164 +2409,361 @@ class NDDPipeline:
           ``substring_pass``) committed under the current run hashes,
           param stamps matching, clusters committed, no crash marker.
 
-        Crash recovery: a ``delta.inflight`` marker brackets all mutations;
-        after a crash, every delta entry point (including this one) refuses
-        and ``run_incremental(full_snapshot)`` heals the catalog (stage 0/1
-        checksum algebra re-ingests/re-signs exactly the missing rows, the
-        full stage-2 rebuild clears the marker).
-
         Lineage semantics are identical to ``run_incremental`` on the same
         appended rows — per-bucket (rows, checksum) advance by the batch's
         delta via the same mod-2^64 algebra — so the two entry points are
-        interchangeable run-to-run, which tests pin by alternating them."""
-        cfg, cat = self.cfg, self.catalog
+        interchangeable run-to-run, which tests pin by alternating them.
+        Commit and crash protocol: ``_apply_changes``."""
+        return self._apply_changes(new_pages, None, substring_pass)
+
+    def delete_pages(
+        self,
+        urls: list[str] | DataFrame,
+        substring_pass: bool = True,
+    ) -> DataFrame:
+        """O(delete) explicit retraction: the caller KNOWS the deleted urls
+        and hands exactly them (the reference's ``update_index`` dropping a
+        vanished video's entries by videoid, ndd/server_ndd.py:246-261) —
+        so the engine skips the drift inference ``run_incremental`` pays on
+        a shrunken snapshot: the stage-0 ``_input_stats`` corpus scan, the
+        per-drifted-bucket stage-0 rewrite from the snapshot, the stage-1
+        RE-SIGNING of every drifted bucket (a uniform delete drifts ALL
+        buckets) and the ``classify_drift`` full-outer join. Zero docs are
+        re-signed: the batch commits as ``page_tombstones`` (or, past the
+        sidecar ceiling, a partition-pruned bucket rewrite), lineage
+        advances by checksum subtraction, and the stage-2/2b/3 tables go
+        through the targeted-retraction core (``_stage2_retract`` — rep
+        rows inherited verbatim by the min surviving exact-group member,
+        dissolved clusters re-clustered by the stage-3 delta).
+
+        Caller contract (refusals raise ``AppendRefusedError``, nothing
+        mutated): every url must exist in the corpus — verified here
+        cheaply (the checksum scan over the affected buckets counts the
+        matches), unlike ``append_pages``'s unverifiable no-duplicate
+        contract. The retraction must fit the broadcast ceiling
+        (``cfg.max_retract``). The catalog must be a committed, current
+        build (shared ``_delta_preconditions`` gate). Commit and crash
+        protocol: ``_apply_changes``."""
+        return self._apply_changes(None, urls, substring_pass)
+
+    def update_pages(
+        self, changed_rows: DataFrame, substring_pass: bool = True
+    ) -> DataFrame:
+        """O(edit) explicit upsert, single-pass: the caller hands the NEW
+        (url, text) rows of docs that already exist (the reference's
+        ``update_index`` re-indexing explicit videoids,
+        ndd/server_ndd.py:307-315). The inferred edit path
+        (``run_incremental`` on the full snapshot) re-signs every drifted
+        bucket — ~the whole corpus for a uniform edit set; here ONLY the
+        handed batch goes through the signature UDF.
+
+        Fused, not composed: one change set carries both halves, so each
+        affected bucket commits once per table, lineage advances ONCE by
+        checksum substitution (bucket = f(url), so per-bucket row counts
+        are invariant), the stage-2 retraction and append cores run
+        back-to-back under the single final run hash, and stage 3 commits
+        both halves — retraction dissolves + appended edges — in ONE
+        clusters swap (the same mixed-drift shape ``run_incremental``
+        produces).
+
+        Caller contract (refusals raise ``AppendRefusedError``, nothing
+        mutated): every url must already exist in the corpus — verified
+        cheaply by the affected-bucket checksum scan; no duplicate urls in
+        the batch; the batch must fit the broadcast-mapping ceiling
+        (``cfg.max_retract``); the catalog must be a committed, current
+        build (shared ``_delta_preconditions`` gate). Commit and crash
+        protocol: ``_apply_changes``."""
+        return self._apply_changes(changed_rows, changed_rows, substring_pass)
+
+    def _apply_changes(
+        self,
+        rows: DataFrame | None,
+        drop_urls: list[str] | DataFrame | None,
+        substring_pass: bool,
+    ) -> DataFrame:
+        """The one change-set commit behind the explicit entry points:
+        ``rows`` are (url, text) rows to add, ``drop_urls`` urls to retract
+        (``append_pages`` passes ``(rows, None)``, ``delete_pages``
+        ``(None, urls)``, ``update_pages`` ``(rows, rows)`` — passing the
+        batch itself drops exactly its urls).
+
+        1. Batch check (refusals mutate nothing): the shared
+           ``_delta_preconditions`` gate; ONE batch-sized stats job over
+           ``rows`` — per-bucket (rows, checksum) delta plus in-batch
+           duplicate-url detection; drops above ``max_retract`` refuse; ONE
+           partition-pruned scan of the pages VIEW over the dropped urls'
+           buckets yields both the subtraction stats and the existence
+           check (view urls are unique by build invariant, so the matched
+           count equals the number of handed urls present).
+        2. Lineage: per bucket, committed − dropped + added (the stage-0
+           mod-2^64 checksum algebra), committed once for pages and once
+           for signatures.
+        3. Stages 0/1: drops commit MERGE-ON-READ as one driver-written
+           ``page_tombstones`` append (url, era) at a freshly bumped
+           retraction era — rows stamped AT that era are the re-adds and
+           survive (operators/mor.py) — and rows land as era-stamped
+           appends; no bucket is rewritten. Past ``page_tombstone_ceiling``
+           the stored tombstones fold first and the affected buckets are
+           rewritten copy-on-write (survivors ∪ fresh, emptied buckets
+           dropped — ceiling 0 disables merge-on-read). The batch signing
+           overlaps the pages commit: both read only the checkpointed batch
+           and mutate different tables.
+        4. Stages 2/2b: ``_stage2_retract`` for drops, then the shared
+           append cores for rows; a pure drop commits pairs and
+           substring_pairs unchanged under the advanced run hashes.
+        5. Stage 3: the delta (ONE clusters commit for both halves), or its
+           full fallback over the committed edge tables (remap/dissolve set
+           over the broadcast ceiling; correctness identical).
+
+        Crash protocol: ``delta.inflight`` goes up before the batch's first
+        table mutation (an over-ceiling fold of stored tombstones brackets
+        itself; the era bump after it is harmless, the clock only moves
+        forward) and comes down only after the stage-2 commit;
+        ``retract.inflight`` brackets the stage-table retraction, and the
+        stage-2b/3 deltas bracket their own commits. A crash anywhere
+        leaves a marker up, so every delta entry point refuses, and
+        ``run_incremental(full_snapshot)`` heals the catalog: the stage-0/1
+        checksum algebra re-ingests/re-signs exactly the drifted buckets
+        (either partial order of the pages and signatures lineage commits
+        heals: a lagging bucket is rewritten or re-signed at the current
+        era, which no stored tombstone governs), and the full stage-2
+        rebuild clears both markers."""
+        cfg, cat, refuse = self.cfg, self.catalog, self._refuse
         h1 = cfg.stage1_hash()
-        refuse = self._refuse
+        verb = (
+            "append" if drop_urls is None
+            else "delete" if rows is None
+            else "update"
+        )
+        upsert = rows is not None and drop_urls is rows
         pstats = self._delta_preconditions(substring_pass)
-
-        # ---- batch prep: ONE materialization, bucket-pure partitions so
-        # both partitioned appends below write one file per task ----
-        new_rows = (
-            new_pages.select("url", "text")
-            .withColumn("bucket", self._bucket_expr())
-            .withColumn("h", F.xxhash64("url", "text"))
-            .repartition("bucket")
-            .localCheckpoint()
-        )
-        # one batch-sized job: per-bucket (rows, checksum) delta + in-batch
-        # url-duplicate detection (urls hash-partition by bucket, so the
-        # per-bucket distinct counts sum to the global distinct count)
-        agg = (
-            new_rows.groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-                F.countDistinct("url").alias("urls"),
-            )
-            .collect()
-        )
-        delta_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in agg
-        }
-        n_new = sum(int(r["rows"]) for r in agg)
-        if n_new != sum(int(r["urls"]) for r in agg):
-            refuse("batch contains duplicate urls")
-        if n_new == 0:
-            return self.clusters_view()
-
-        # ---- stages 0 + 1, overlapped (guide §2.6; r6 second pass): the
-        # pages append/commit and the batch signing both read only the
-        # checkpointed batch and mutate DIFFERENT tables under the
-        # delta.inflight marker, which routes any partial combination to
-        # the idempotent full heal — the relative order of the two lineage
-        # commits adds no guarantee (either partial order trips the
-        # signatures-lag-pages precondition and heals). Both joined before
-        # the stage-2 run hash is computed, since that hash is derived
-        # from the advanced lineage.
-        t0 = time.monotonic()
-        self._set_marker("delta.inflight")
-        merged = {
-            b: (
-                pstats.get(b, (0, 0))[0] + d[0],
-                _wrap64(pstats.get(b, (0, 0))[1] + d[1]),
-            )
-            for b, d in delta_stats.items()
-        }
-
-        def stage0_commit():
-            cat.write(
-                self._stamp_era(new_rows.drop("h")),
-                "pages",
-                partition_by=["bucket"],
-                mode="append",
-                max_records_per_file=2048,
-            )
-            wall_ms = int((time.monotonic() - t0) * 1000)
-            cat.mark_complete(
-                "pages",
-                h1,
-                {b: m[0] for b, m in merged.items()},
-                wall_ms,
-                checksums={b: m[1] for b, m in merged.items()},
-            )
-            cat.add_metrics(
-                "pages",
-                {
-                    "buckets_appended": len(merged),
-                    "buckets_rewritten": 0,
-                    "appended_docs_ingested": n_new,
-                    "wall_ms": wall_ms,
-                },
-            )
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            stage0_future = pool.submit(stage0_commit)
-            # stage 1: sign ONLY the batch (partitions stay bucket-pure
-            # through the Arrow map, so the partitioned append is
-            # fan-out-free)
-            t1 = time.monotonic()
-            new_sigs = (
-                new_rows.select("url", "text")
-                .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
-                .withColumn(
-                    "bucket",
-                    F.pmod(
-                        F.xxhash64("url"), F.lit(cfg.num_buckets)
-                    ).cast("int"),
-                )
+        added: dict[int, tuple[int, int]] = {}
+        if rows is not None:
+            # ONE materialization, bucket-pure partitions so every
+            # partitioned write below emits one file per task; urls
+            # hash-partition by bucket, so per-bucket distinct counts sum
+            # to the global distinct count
+            rows = (
+                rows.select("url", "text")
+                .withColumn("bucket", self._bucket_expr())
+                .repartition("bucket")
                 .localCheckpoint()
             )
-            cat.write(
-                self._stamp_era(new_sigs),
-                "signatures",
-                partition_by=["bucket"],
-                mode="append",
-                max_records_per_file=2048,
+            added, agg = _bucket_stats(rows, F.countDistinct("url").alias("n"))
+            n_rows = sum(r for r, _ in added.values())
+            if n_rows != sum(int(r["n"]) for r in agg):
+                refuse("batch contains duplicate urls")
+            if not n_rows:
+                return self.clusters_view()
+        dropped: dict[int, tuple[int, int]] = {}
+        if drop_urls is not None:
+            if upsert:
+                drop = rows.select("url")
+                counts = {b: r for b, (r, _) in added.items()}
+            else:
+                if not isinstance(drop_urls, DataFrame):
+                    drop_urls = self.spark.createDataFrame(
+                        [(u,) for u in drop_urls], "url string"
+                    )
+                drop = (
+                    drop_urls.select("url")
+                    .distinct()
+                    .withColumn("bucket", self._bucket_expr())
+                    .localCheckpoint()
+                )
+                counts = {
+                    int(r["bucket"]): int(r["n"])
+                    for r in drop.groupBy("bucket")
+                    .agg(F.count("*").alias("n"))
+                    .collect()
+                }
+                drop = drop.select("url")
+            n_drop = sum(counts.values())
+            if not n_drop:
+                return self.clusters_view()
+            if n_drop > cfg.max_retract:
+                refuse(
+                    f"{'retraction' if rows is None else 'update'} of "
+                    f"{n_drop} urls exceeds max_retract={cfg.max_retract} "
+                    "(broadcast-mapping ceiling)"
+                )
+            dropped, _ = _bucket_stats(
+                self.pages_table()
+                .where(F.col("bucket").isin(sorted(counts)))
+                .join(F.broadcast(drop), "url", "left_semi")
             )
-            wall_ms = int((time.monotonic() - t1) * 1000)
+            n_found = sum(r for r, _ in dropped.values())
+            if n_found != n_drop:
+                refuse(
+                    f"{n_drop - n_found} of the handed urls are not in the "
+                    "corpus"
+                )
+            if any(b not in pstats for b in dropped):
+                refuse(
+                    f"{verb}d rows found in buckets with no committed lineage"
+                )
+        merged = {}
+        for b in set(added) | set(dropped):
+            (r0, c0), (rd, cd), (ra, ca) = (
+                d.get(b, (0, 0)) for d in (pstats, dropped, added)
+            )
+            merged[b] = (r0 - rd + ra, _wrap64(c0 - cd + ca))
+
+        # ---- stages 0/1 commit
+        t0 = time.monotonic()
+        fold = False
+        if dropped:
+            stored = (
+                cat.count_rows(mor.PAGE_TOMBSTONES)
+                if cat.exists(mor.PAGE_TOMBSTONES)
+                else 0
+            )
+            fold = stored + n_drop > cfg.page_tombstone_ceiling
+            if fold:
+                self._fold_page_tombstones()  # self-bracketing
+            era = self._bump_retract_era()
+        self._set_marker("delta.inflight")
+        if dropped and not fold:
+            cat._append_small(
+                mor.PAGE_TOMBSTONES,
+                pd.DataFrame(
+                    {"url": sorted(r["url"] for r in drop.collect()), "era": era}
+                ),
+                pa.schema([("url", pa.string()), ("era", pa.int64())]),
+            )
+
+        def commit(table: str, fresh: DataFrame | None) -> int:
+            if fold:
+                self._rewrite_buckets(
+                    table,
+                    sorted(merged),
+                    lambda df: df.join(F.broadcast(drop), "url", "left_anti"),
+                    fresh,
+                    emptied=[b for b, m in merged.items() if m[0] == 0],
+                )
+            elif fresh is not None:
+                cat.write(
+                    fresh,
+                    table,
+                    partition_by=["bucket"],
+                    mode="append",
+                    max_records_per_file=2048,
+                )
+            wall_ms = int((time.monotonic() - t0) * 1000)
             cat.mark_complete(
-                "signatures",
+                table,
                 h1,
                 {b: m[0] for b, m in merged.items()},
                 wall_ms,
                 checksums={b: m[1] for b, m in merged.items()},
             )
+            return wall_ms
+
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            pages_future = pool.submit(
+                commit, "pages", None if rows is None else self._stamp_era(rows)
+            )
+            new_sigs = None
+            if rows is not None:
+                # partitions stay bucket-pure through the Arrow map, so the
+                # partitioned signatures write is fan-out-free
+                new_sigs = (
+                    rows.select("url", "text")
+                    .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
+                    .withColumn("bucket", self._bucket_expr())
+                    .localCheckpoint()
+                )
+            sigs_ms = commit(
+                "signatures",
+                None if new_sigs is None else self._stamp_era(new_sigs),
+            )
+            pages_ms = pages_future.result()
+        if drop_urls is None:
+            pages_metrics = {
+                "buckets_appended": len(merged),
+                "buckets_rewritten": 0,
+                "appended_docs_ingested": n_rows,
+            }
+        else:
+            pages_metrics = {
+                f"{verb}d_docs": n_drop,
+                "buckets_rewritten": len(merged) if fold else 0,
+                "page_tombstone_rows": 0 if fold else n_drop,
+            }
+            if rows is None:
+                pages_metrics["buckets_dropped"] = (
+                    sum(1 for m in merged.values() if m[0] == 0) if fold else 0
+                )
+        cat.add_metrics("pages", {**pages_metrics, "wall_ms": pages_ms})
+        if rows is not None:
             cat.add_metrics(
                 "signatures",
                 {
                     "buckets_computed": 0,
-                    "buckets_appended": len(merged),
-                    "appended_docs_signed": n_new,
-                    "wall_ms": wall_ms,
+                    "buckets_appended": 0 if dropped else len(merged),
+                    "appended_docs_signed": n_rows,
+                    "wall_ms": sigs_ms,
                 },
             )
-            stage0_future.result()
 
-        # ---- stages 2 / 2b / 3: the shared delta append cores ----
-        h2 = self.stage2_run_hash()  # AFTER the stage-0/1 lineage advances
-        new_rep_urls = self._stage2_apply_append(
-            new_sigs.select("url", "fp", "bands", "simhash"),
-            n_new,
-            h2,
-            time.monotonic(),
-        )
-        if substring_pass:
-            if not self.stage2b_delta(
-                new_urls=new_rep_urls,
-                new_pages=new_rows.select("url", "text"),
+        # ---- stages 2/2b (drops pre-checked against max_retract above, so
+        # a declined retraction is unreachable: surface, never rebuild)
+        if dropped and not self._stage2_retract(drop, cfg.max_retract):
+            refuse(
+                f"stage-2 retraction declined mid-{verb} (pages/signatures "
+                "already rewritten — heal with run_incremental)"
+            )
+        if rows is not None:
+            new_rep_urls = self._stage2_apply_append(
+                new_sigs.select("url", "fp", "bands", "simhash"),
+                n_rows,
+                self.stage2_run_hash(),  # after the stage-0/1 advance
+                time.monotonic(),
+            )
+            if substring_pass and not self.stage2b_delta(
+                new_urls=new_rep_urls, new_pages=rows.select("url", "text")
             ):
-                # unreachable given the preconditions above; surface rather
-                # than silently rebuild (the caller wanted O(append))
-                refuse("stage-2b delta state became invalid mid-append")
+                refuse(f"stage-2b delta state became invalid mid-{verb}")
+        else:
+            cat.mark_complete(
+                "pairs", self.stage2_run_hash(), {-1: cat.count_rows("pairs")}, 0
+            )
+            if substring_pass:
+                cat.mark_complete(
+                    "substring_pairs",
+                    self.stage2b_run_hash(),
+                    {-1: cat.count_rows("substring_pairs")},
+                    0,
+                )
+            self._clear_marker("delta.inflight")
         if not self.stage3_clusters_delta():
-            # legitimate wide-merge fallback (remap over the broadcast
-            # ceiling): full CC over the catalog's committed edge tables —
-            # no input snapshot needed, correctness identical
             self.stage3_clusters(resume=True)
         return self.clusters_view()
+
+    def _rewrite_buckets(
+        self, table, buckets, keep, fresh=None, emptied=()
+    ) -> None:
+        """Copy-on-write rewrite of ``buckets`` of a bucket-partitioned
+        table: the partition-pruned rows ``keep`` retains, plus ``fresh``
+        rows, replace those buckets by dynamic partition overwrite;
+        ``emptied`` bucket dirs are dropped (dynamic overwrite never
+        touches a partition with zero output rows). Checkpointed first:
+        the overwrite replaces partitions the plan reads. Missing columns
+        null-fill: stored pages keep the input's full schema (warc_ts/html/
+        lang ride along), a batch carries only the extraction inputs."""
+        cat = self.catalog
+        df = keep(cat.read(table).where(F.col("bucket").isin(list(buckets))))
+        if fresh is not None:
+            df = df.unionByName(fresh, allowMissingColumns=True)
+        cat.write(
+            df.localCheckpoint(),
+            table,
+            partition_by=["bucket"],
+            mode="overwrite",
+            max_records_per_file=2048,
+        )
+        for b in emptied:
+            cat.drop_partition(table, b)
 
     def _fold_page_tombstones(self) -> int:
         """Physically reclaim the ``page_tombstones`` merge-on-read sidecar
@@ -2637,11 +2779,7 @@ class NDDPipeline:
         original eras, so the still-present sidecar governs nothing that
         survived) and the marker routes every delta entry to the full heal.
         Returns the number of tombstone rows folded."""
-        import shutil as _shutil
-
-        from near_duplicate_detection_spark.operators import mor
-
-        cat, cfg = self.catalog, self.cfg
+        cat = self.catalog
         if not cat.exists(mor.PAGE_TOMBSTONES):
             return 0
         n_tomb = cat.count_rows(mor.PAGE_TOMBSTONES)
@@ -2650,33 +2788,20 @@ class NDDPipeline:
         # single-slice LocalRelation (bucket = f(url) needs Spark's xxhash64)
         buckets = sorted(
             int(r["bucket"])
-            for r in tomb.withColumn("bucket", self._bucket_expr())
-            .select("bucket")
+            for r in tomb.select(self._bucket_expr().alias("bucket"))
             .distinct()
             .collect()
         )
-        bucket_pred = F.col("bucket").isin([int(b) for b in buckets])
-        live_rows = cat.latest_partition_stats("pages", cfg.stage1_hash())
+        live_rows = cat.latest_partition_stats("pages", self.cfg.stage1_hash())
         self._set_marker("delta.inflight")
         for table in ("pages", "signatures"):
-            # localCheckpoint: the overwrite replaces partitions the plan
-            # reads (the same source-break rule as every bucket rewrite)
-            live = mor.apply_tombstones(
-                cat.read(table).where(bucket_pred), tomb
-            ).localCheckpoint()
-            cat.write(
-                live,
+            self._rewrite_buckets(
                 table,
-                partition_by=["bucket"],
-                mode="overwrite",
-                max_records_per_file=2048,
+                buckets,
+                lambda df: mor.apply_tombstones(df, tomb),
+                emptied=[b for b in buckets if live_rows.get(b, (0, 0))[0] == 0],
             )
-            for b in buckets:
-                if live_rows.get(b, (0, 0))[0] == 0:
-                    # dynamic overwrite never touches a partition with zero
-                    # output rows — drop fully-dead bucket dirs explicitly
-                    cat.drop_partition(table, b)
-        _shutil.rmtree(cat.path(mor.PAGE_TOMBSTONES), ignore_errors=True)
+        shutil.rmtree(cat.path(mor.PAGE_TOMBSTONES), ignore_errors=True)
         self._clear_marker("delta.inflight")
         cat.add_metrics(
             "pages",
@@ -2686,487 +2811,6 @@ class NDDPipeline:
             },
         )
         return n_tomb
-
-    def delete_pages(
-        self,
-        urls: list[str] | DataFrame,
-        substring_pass: bool = True,
-    ) -> DataFrame:
-        """O(delete) explicit retraction: the caller KNOWS the deleted urls
-        and hands exactly them (the reference's ``update_index`` dropping a
-        vanished video's entries by videoid, ndd/server_ndd.py:246-261) —
-        so the engine skips the drift inference ``run_incremental`` pays on
-        a shrunken snapshot: the stage-0 ``_input_stats`` corpus scan, the
-        per-drifted-bucket stage-0 rewrite from the snapshot, the stage-1
-        RE-SIGNING of every drifted bucket (a uniform delete drifts ALL
-        buckets, so the inferred path re-signs ~the whole surviving corpus
-        through the MinHash UDF), and the ``classify_drift`` full-outer
-        join. Here zero docs are re-signed: pages and signatures are
-        rewritten by a broadcast anti-join over ONLY the buckets holding
-        deleted urls (partition-pruned scans — the Iceberg MERGE/DELETE
-        analog), lineage advances by checksum subtraction (the same
-        mod-2^64 algebra as the append), and the stage-2/2b/3 tables go
-        through the shared targeted-retraction core (``_stage2_retract`` —
-        rep rows inherited verbatim by the min surviving exact-group
-        member, dissolved clusters re-clustered by the stage-3 delta).
-
-        Caller contract (refusals raise ``AppendRefusedError``, nothing
-        mutated): every url must exist in the corpus — verified here
-        cheaply (the checksum scan over the affected buckets counts the
-        matches), unlike ``append_pages``'s unverifiable no-duplicate
-        contract. The retraction must fit the broadcast ceiling
-        (``cfg.max_retract``). The catalog must be a committed, current
-        build (shared ``_delta_preconditions`` gate).
-
-        Crash recovery: ``delta.inflight`` brackets the pages/signatures
-        rewrites, ``retract.inflight`` (inside ``_stage2_retract``) the
-        stage-table rewrites; after a crash every delta entry refuses and
-        ``run_incremental(full_snapshot)`` heals the catalog."""
-        cfg, cat, refuse = self.cfg, self.catalog, self._refuse
-        h1 = cfg.stage1_hash()
-        pstats = self._delta_preconditions(substring_pass)
-        if not isinstance(urls, DataFrame):
-            urls = self.spark.createDataFrame(
-                [(u,) for u in urls], "url string"
-            )
-        # batch-sized: dedup + bucket each url; one tiny job yields the
-        # affected-bucket list (the partition-pruning key for every corpus
-        # touch below) and the retraction size
-        u = (
-            urls.select("url")
-            .distinct()
-            .withColumn("bucket", self._bucket_expr())
-            .localCheckpoint()
-        )
-        per_bucket_urls = {
-            int(r["bucket"]): int(r["n"])
-            for r in u.groupBy("bucket").agg(F.count("*").alias("n")).collect()
-        }
-        n_del = sum(per_bucket_urls.values())
-        if n_del == 0:
-            return self.clusters_view()
-        if n_del > cfg.max_retract:
-            refuse(
-                f"retraction of {n_del} urls exceeds max_retract="
-                f"{cfg.max_retract} (broadcast-mapping ceiling)"
-            )
-        affected = sorted(per_bucket_urls)
-        bucket_pred = F.col("bucket").isin([int(b) for b in affected])
-        # ONE partition-pruned scan: per-bucket (rows, checksum) of the
-        # doomed rows — both the lineage delta AND the existence check
-        # (pages urls are unique by build invariant, so matched-row count
-        # == number of handed urls actually present)
-        del_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in self.pages_table()
-            .where(bucket_pred)
-            .join(F.broadcast(u.select("url")), "url", "left_semi")
-            .withColumn("h", F.xxhash64("url", "text"))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-            )
-            .collect()
-        }
-        n_found = sum(r for r, _ in del_stats.values())
-        if n_found != n_del:
-            refuse(
-                f"{n_del - n_found} of the handed urls are not in the corpus"
-            )
-        if any(b not in pstats for b in del_stats):
-            refuse("deleted rows found in buckets with no committed lineage")
-        merged = {
-            b: (
-                pstats[b][0] - d[0],
-                _wrap64(pstats[b][1] - d[1]),
-            )
-            for b, d in del_stats.items()
-        }
-
-        # ---- stages 0/1: MERGE-ON-READ delete — the batch commits as ONE
-        # driver-written tombstone sidecar append (url, era) governing both
-        # bucket tables (operators/mor.py), lineage advances by checksum
-        # subtraction, and NO bucket is rewritten (the round-3 shape
-        # rewrote every affected bucket — O(corpus) write volume for a
-        # uniformly random batch; it survives below as the over-ceiling
-        # fold, the Iceberg position-delete + maintenance pattern).
-        import pandas as pd
-        import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators import mor
-
-        t0 = time.monotonic()
-        stored_tomb = (
-            cat.count_rows(mor.PAGE_TOMBSTONES)
-            if cat.exists(mor.PAGE_TOMBSTONES)
-            else 0
-        )
-        fold = stored_tomb + n_del > cfg.page_tombstone_ceiling
-        if fold:
-            # over the sidecar ceiling: reclaim the stored tombstones
-            # physically first (self-bracketing), then apply THIS batch
-            # copy-on-write — ceiling 0 disables merge-on-read entirely
-            self._fold_page_tombstones()
-        era = self._bump_retract_era()
-        self._set_marker("delta.inflight")
-        if fold:
-            for table in ("pages", "signatures"):
-                # checkpointed: the write overwrites partitions the plan
-                # reads (same source-break rule as the _stage2_retract fold)
-                survivors = (
-                    cat.read(table)
-                    .where(bucket_pred)
-                    .join(F.broadcast(u.select("url")), "url", "left_anti")
-                    .localCheckpoint()
-                )
-                cat.write(
-                    survivors,
-                    table,
-                    partition_by=["bucket"],
-                    mode="overwrite",
-                    max_records_per_file=2048,
-                )
-                for b, m in merged.items():
-                    if m[0] == 0:
-                        # dynamic overwrite never touches a partition with
-                        # zero output rows — drop the emptied dir explicitly
-                        cat.drop_partition(table, b)
-        else:
-            cat._append_small(
-                mor.PAGE_TOMBSTONES,
-                pd.DataFrame(
-                    {
-                        "url": sorted(r["url"] for r in u.select("url").collect()),
-                        "era": era,
-                    }
-                ),
-                pa.schema([("url", pa.string()), ("era", pa.int64())]),
-            )
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        for table in ("pages", "signatures"):
-            cat.mark_complete(
-                table,
-                h1,
-                {b: m[0] for b, m in merged.items()},
-                wall_ms,
-                checksums={b: m[1] for b, m in merged.items()},
-            )
-        cat.add_metrics(
-            "pages",
-            {
-                "deleted_docs": n_del,
-                "buckets_rewritten": len(affected) if fold else 0,
-                "buckets_dropped": sum(
-                    1 for m in merged.values() if m[0] == 0
-                )
-                if fold
-                else 0,
-                "page_tombstone_rows": 0 if fold else n_del,
-                "wall_ms": wall_ms,
-            },
-        )
-
-        # ---- stages 2/2b: the shared targeted-retraction core (broadcast
-        # relabel/drop per stage table; rep rows inherited by the min
-        # surviving exact-group member) — size pre-checked above, so a
-        # False here is unreachable; surface rather than silently rebuild
-        if not self._stage2_retract(u.select("url"), cfg.max_retract):
-            refuse(
-                "stage-2 retraction declined mid-delete (pages/signatures "
-                "already rewritten — heal with run_incremental)"
-            )
-        # no appended docs: commit pairs/substring_pairs under the NEW run
-        # hashes (the lineage advance above changed them) — same contract
-        # as stage2_pairs_delta's n_new == 0 branch
-        cat.mark_complete(
-            "pairs", self.stage2_run_hash(), {-1: cat.count_rows("pairs")}, 0
-        )
-        if substring_pass:
-            cat.mark_complete(
-                "substring_pairs",
-                self.stage2b_run_hash(),
-                {-1: cat.count_rows("substring_pairs")},
-                0,
-            )
-        self._clear_marker("delta.inflight")
-
-        # ---- stage 3: dissolve + re-cluster only the touched clusters
-        if not self.stage3_clusters_delta():
-            # wide-dissolve fallback (over the broadcast ceiling): full
-            # CC over the committed edge tables, correctness identical
-            self.stage3_clusters(resume=True)
-        return self.clusters_view()
-
-    def update_pages(
-        self, changed_rows: DataFrame, substring_pass: bool = True
-    ) -> DataFrame:
-        """O(edit) explicit upsert, single-pass: the caller hands the NEW
-        (url, text) rows of docs that already exist (the reference's
-        ``update_index`` re-indexing explicit videoids,
-        ndd/server_ndd.py:307-315). The inferred edit path
-        (``run_incremental`` on the full snapshot) re-signs every drifted
-        bucket — ~the whole corpus for a uniform edit set; here ONLY the
-        handed batch goes through the signature UDF.
-
-        Fused, not composed: the former delete_pages + append_pages
-        composition paid both delta chains' fixed costs — each affected
-        bucket of pages AND signatures written twice (anti-join overwrite,
-        then append), four lineage commits, two run-hash advances with an
-        intermediate no-op pairs/substring_pairs commit between them.
-        Every updated url keeps its bucket (bucket = f(url)), so here each
-        affected bucket is rewritten ONCE with survivors ∪ re-signed batch
-        rows, per-bucket row counts are INVARIANT and lineage advances
-        ONCE by checksum substitution (old rows subtracted, batch rows
-        added — the same mod-2^64 algebra), and the shared stage-2
-        retraction + append cores run back-to-back under the single final
-        run hash. Stage 3 commits both halves — retraction dissolves +
-        appended edges — in ONE clusters swap (the same mixed-drift shape
-        ``run_incremental`` produces).
-
-        Caller contract (refusals raise ``AppendRefusedError``, nothing
-        mutated): every url must already exist in the corpus — verified
-        cheaply by the affected-bucket checksum scan; no duplicate urls in
-        the batch; the batch must fit the broadcast-mapping ceiling
-        (``cfg.max_retract``); the catalog must be a committed, current
-        build (shared ``_delta_preconditions`` gate).
-
-        Crash recovery: ``delta.inflight`` brackets the pages/signatures
-        rewrites and the stage-2 appends, ``retract.inflight`` (inside
-        ``_stage2_retract``) the stage-table relabels; after a crash every
-        delta entry refuses and ``run_incremental(full_snapshot)`` heals
-        the catalog."""
-        cfg, cat, refuse = self.cfg, self.catalog, self._refuse
-        h1 = cfg.stage1_hash()
-        pstats = self._delta_preconditions(substring_pass)
-
-        # ---- batch prep: ONE materialization, bucket-pure partitions so
-        # both partitioned rewrites below write one file per task ----
-        new_rows = (
-            changed_rows.select("url", "text")
-            .withColumn("bucket", self._bucket_expr())
-            .withColumn("h", F.xxhash64("url", "text"))
-            .repartition("bucket")
-            .localCheckpoint()
-        )
-        agg = (
-            new_rows.groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-                F.countDistinct("url").alias("urls"),
-            )
-            .collect()
-        )
-        add_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in agg
-        }
-        n_upd = sum(r for r, _ in add_stats.values())
-        if n_upd == 0:
-            return self.clusters_view()
-        if n_upd != sum(int(r["urls"]) for r in agg):
-            refuse("batch contains duplicate urls")
-        if n_upd > cfg.max_retract:
-            refuse(
-                f"update of {n_upd} urls exceeds max_retract="
-                f"{cfg.max_retract} (broadcast-mapping ceiling)"
-            )
-        urls = new_rows.select("url")
-        affected = sorted(add_stats)
-        bucket_pred = F.col("bucket").isin([int(b) for b in affected])
-        # ONE partition-pruned scan: per-bucket (rows, checksum) of the
-        # doomed OLD rows — the subtraction half of the lineage delta AND
-        # the existence check (pages urls are unique by build invariant,
-        # so matched-row count == number of handed urls actually present)
-        del_stats = {
-            int(r["bucket"]): (int(r["rows"]), _wrap64(int(r["cks"])))
-            for r in self.pages_table()
-            .where(bucket_pred)
-            .join(F.broadcast(urls), "url", "left_semi")
-            .withColumn("h", F.xxhash64("url", "text"))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("rows"),
-                F.sum(F.col("h").cast("decimal(38,0)")).alias("cks"),
-            )
-            .collect()
-        }
-        n_found = sum(r for r, _ in del_stats.values())
-        if n_found != n_upd:
-            refuse(
-                f"{n_upd - n_found} of the handed urls are not in the corpus"
-            )
-        if any(b not in pstats for b in del_stats):
-            refuse("updated rows found in buckets with no committed lineage")
-        # bucket = f(url): every replaced row re-enters its own bucket, so
-        # per-bucket row counts hold and only the checksums substitute
-        merged = {
-            b: (
-                pstats[b][0] - del_stats[b][0] + a[0],
-                _wrap64(pstats[b][1] - del_stats[b][1] + a[1]),
-            )
-            for b, a in add_stats.items()
-        }
-
-        # ---- stage 1 compute: sign ONLY the batch (pure — no mutation
-        # yet, so a crash here needs no heal; partitions stay bucket-pure
-        # through the Arrow map)
-        t0 = time.monotonic()
-        new_sigs = (
-            new_rows.select("url", "text")
-            .mapInPandas(signature_map_fn(cfg), schema=SIGNATURE_SCHEMA)
-            .withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("url"), F.lit(cfg.num_buckets)).cast("int"),
-            )
-            .localCheckpoint()
-        )
-
-        # ---- stages 0/1 commit: MERGE-ON-READ upsert — the old rows die
-        # as ONE driver-written tombstone sidecar append (url, era) and the
-        # re-signed batch lands as new era-stamped files in its buckets
-        # (delete-then-append, the Iceberg v2 position-delete + append
-        # commit shape; rows stamped AT the tombstone era are the re-adds
-        # and survive — operators/mor.py). NO bucket is rewritten; the
-        # round-3 survivors ∪ batch rewrite survives as the over-ceiling
-        # fold. Batch partitions are bucket-pure, so both appends write one
-        # file per touched bucket.
-        import pandas as pd
-        import pyarrow as pa
-
-        from near_duplicate_detection_spark.operators import mor
-
-        stored_tomb = (
-            cat.count_rows(mor.PAGE_TOMBSTONES)
-            if cat.exists(mor.PAGE_TOMBSTONES)
-            else 0
-        )
-        fold = stored_tomb + n_upd > cfg.page_tombstone_ceiling
-        if fold:
-            # over the sidecar ceiling: reclaim stored tombstones first
-            # (self-bracketing), then apply THIS batch copy-on-write —
-            # ceiling 0 disables merge-on-read entirely
-            self._fold_page_tombstones()
-        era = self._bump_retract_era()
-        self._set_marker("delta.inflight")
-        if fold:
-            for table, fresh in (
-                ("pages", self._stamp_era(new_rows.drop("h"))),
-                ("signatures", self._stamp_era(new_sigs)),
-            ):
-                # checkpointed: the write overwrites partitions the plan
-                # reads. allowMissingColumns: the stored pages table keeps
-                # the input's full schema (warc_ts/html/lang ride along);
-                # the batch carries only (url, text, bucket, era) —
-                # extraction inputs — so its rows null-fill the passthrough
-                # columns, same as an appended batch
-                replaced = (
-                    cat.read(table)
-                    .where(bucket_pred)
-                    .join(F.broadcast(urls), "url", "left_anti")
-                    .unionByName(fresh, allowMissingColumns=True)
-                    .localCheckpoint()
-                )
-                cat.write(
-                    replaced,
-                    table,
-                    partition_by=["bucket"],
-                    mode="overwrite",
-                    max_records_per_file=2048,
-                )
-        else:
-            cat._append_small(
-                mor.PAGE_TOMBSTONES,
-                pd.DataFrame(
-                    {
-                        "url": sorted(r["url"] for r in urls.collect()),
-                        "era": era,
-                    }
-                ),
-                pa.schema([("url", pa.string()), ("era", pa.int64())]),
-            )
-            # the two appends are order-free (different tables, both under
-            # the marker — any partial combination heals) — pooled (§2.6)
-            from concurrent.futures import ThreadPoolExecutor
-
-            appends = (
-                lambda: cat.write(
-                    self._stamp_era(new_rows.drop("h")),
-                    "pages",
-                    partition_by=["bucket"],
-                    mode="append",
-                    max_records_per_file=2048,
-                ),
-                lambda: cat.write(
-                    self._stamp_era(new_sigs),
-                    "signatures",
-                    partition_by=["bucket"],
-                    mode="append",
-                    max_records_per_file=2048,
-                ),
-            )
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                for _ in pool.map(lambda w: w(), appends):
-                    pass
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        for table in ("pages", "signatures"):
-            cat.mark_complete(
-                table,
-                h1,
-                {b: m[0] for b, m in merged.items()},
-                wall_ms,
-                checksums={b: m[1] for b, m in merged.items()},
-            )
-        cat.add_metrics(
-            "pages",
-            {
-                "updated_docs": n_upd,
-                "buckets_rewritten": len(affected) if fold else 0,
-                "page_tombstone_rows": 0 if fold else n_upd,
-                "wall_ms": wall_ms,
-            },
-        )
-        cat.add_metrics(
-            "signatures",
-            {
-                "buckets_computed": 0,
-                "buckets_appended": 0,
-                "appended_docs_signed": n_upd,
-                "wall_ms": wall_ms,
-            },
-        )
-
-        # ---- stage 2: the shared retraction core (old rows out of every
-        # stage table; rep rows inherited by the min surviving exact-group
-        # member), then the shared append core — back-to-back under the
-        # ONE final run hash (size pre-checked above, so a False here is
-        # unreachable; surface rather than silently rebuild)
-        if not self._stage2_retract(urls, cfg.max_retract):
-            refuse(
-                "stage-2 retraction declined mid-update (pages/signatures "
-                "already rewritten — heal with run_incremental)"
-            )
-        h2 = self.stage2_run_hash()  # AFTER the single stage-1 advance
-        new_rep_urls = self._stage2_apply_append(
-            new_sigs.select("url", "fp", "bands", "simhash"),
-            n_upd,
-            h2,
-            time.monotonic(),
-        )
-        if substring_pass:
-            if not self.stage2b_delta(
-                new_urls=new_rep_urls,
-                new_pages=new_rows.select("url", "text"),
-            ):
-                refuse("stage-2b delta state became invalid mid-update")
-
-        # ---- stage 3: ONE clusters swap commits retraction + re-append
-        if not self.stage3_clusters_delta():
-            # wide-merge/dissolve fallback (over the broadcast ceiling):
-            # full CC over the committed edge tables, correctness identical
-            self.stage3_clusters(resume=True)
-        return self.clusters_view()
 
     def compact(self) -> dict:
         """Table maintenance: fold the merge-on-read label patch and rewrite
@@ -3203,9 +2847,6 @@ class NDDPipeline:
         points refuse, and ``run_incremental(full_snapshot)`` heals via the
         per-bucket checksum algebra, exactly as for a crashed retraction.
         Returns ``{table: (files_before, files_after), ...}``."""
-        import os as _os
-        import shutil as _shutil
-
         cat, refuse = self.catalog, self._refuse
         if self._delta_suspect():
             refuse("crash marker up (a prior retraction/delta was killed)")
@@ -3219,22 +2860,20 @@ class NDDPipeline:
             or self._append_era() > 0
         ):
             before = cat.file_count("clusters")
-            _shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
+            shutil.rmtree(cat.path("clusters_next"), ignore_errors=True)
             # the view resolves tombstones + label patch → both folded
             cat.write(self._stamp_era(self.clusters_view()), "clusters_next")
             self._set_marker("delta.inflight")
-            _shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
-            _shutil.rmtree(cat.path("clusters"), ignore_errors=True)
-            _os.rename(cat.path("clusters_next"), cat.path("clusters"))
+            shutil.rmtree(cat.path("cluster_remap"), ignore_errors=True)
+            shutil.rmtree(cat.path("clusters"), ignore_errors=True)
+            os.rename(cat.path("clusters_next"), cat.path("clusters"))
             # after the swap: era-inert against the staged rows, so the
             # swap→wipe crash window never resurrects dead rows
-            _shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
+            shutil.rmtree(cat.path("cluster_tombstones"), ignore_errors=True)
             self._reset_append_era()
             self._clear_marker("delta.inflight")
             out["clusters"] = (before, cat.file_count("clusters"))
-        from near_duplicate_detection_spark.operators import mor as _mor
-
-        if cat.exists(_mor.PATCH_TABLE):
+        if cat.exists(mor.PATCH_TABLE):
             # fold the merge-on-read RETRACTION patch (operators/mor.py):
             # rewrite each governed stage-2/2b table from its view — the
             # broadcast-resolved logical rows — with a fresh era stamp,
@@ -3242,23 +2881,22 @@ class NDDPipeline:
             # afterwards. Crash protocol: retract.inflight brackets the
             # multi-table rewrite (same marker as a mid-flight retraction);
             # a crash routes every delta entry to the full rebuild.
-            n_patch = cat.count_rows(_mor.PATCH_TABLE)
-            with open(self._retract_marker_path(), "w") as f:
-                f.write("patch fold in progress\n")
-            for table in _mor.GOVERNED_TABLES:
+            n_patch = cat.count_rows(mor.PATCH_TABLE)
+            self._set_marker("retract.inflight")
+            for table in mor.GOVERNED_TABLES:
                 if cat.exists(table):
                     cat.write(
                         self._stamp_era(self.stage_view(table))
                         .localCheckpoint(),
                         table,
                     )
-            _shutil.rmtree(cat.path(_mor.PATCH_TABLE), ignore_errors=True)
-            self._clear_retract_inflight()
+            shutil.rmtree(cat.path(mor.PATCH_TABLE), ignore_errors=True)
+            self._clear_marker("retract.inflight")
             out["retract_patch"] = (1, 0)
             cat.add_metrics(
                 "compaction", {"retract_patch_rows_folded": n_patch}
             )
-        if cat.exists(_mor.PAGE_TOMBSTONES):
+        if cat.exists(mor.PAGE_TOMBSTONES):
             # fold the merge-on-read PAGE tombstones (explicit deletes/
             # updates commit url tombstones instead of bucket rewrites):
             # rewrite only the governed buckets of pages/signatures with
@@ -3341,8 +2979,6 @@ def pages_view(catalog: StageCatalog) -> DataFrame:
     LocalRelation (era semantics: a row written at or after the tombstone's
     commit is a re-add and survives). Physical reclamation happens at the
     ``page_tombstone_ceiling`` fold or via ``compact()``."""
-    from near_duplicate_detection_spark.operators import mor
-
     df = catalog.read("pages")
     tomb = mor.page_tombstone_agg(catalog)
     return df if tomb is None else mor.apply_tombstones(df, tomb)
@@ -3351,8 +2987,6 @@ def pages_view(catalog: StageCatalog) -> DataFrame:
 def signatures_view(catalog: StageCatalog) -> DataFrame:
     """The signatures table under the same ``page_tombstones`` governance
     as ``pages_view`` (one row per live url each, written in lockstep)."""
-    from near_duplicate_detection_spark.operators import mor
-
     df = catalog.read("signatures")
     tomb = mor.page_tombstone_agg(catalog)
     return df if tomb is None else mor.apply_tombstones(df, tomb)
@@ -3383,8 +3017,6 @@ def patched_clusters(catalog: StageCatalog) -> DataFrame:
     every row alive at its commit). Both sidecars resolve here with one
     broadcast join each, bounded by ``cfg.max_remap``; any rewriting
     commit folds and wipes them."""
-    from near_duplicate_detection_spark.operators import mor
-
     df = catalog.read("clusters")
     cols = ("url", "cluster_id", "is_representative")
     tomb = mor.tombstone_agg(catalog)
@@ -3435,7 +3067,6 @@ def query_top_k(
     listed newer docs" — tests/test_query_freshness.py pins this.
     """
     import numpy as np
-    import pandas as pd
 
     from near_duplicate_detection_spark.functions.hashing import perm_params
     from near_duplicate_detection_spark.functions.signatures import (

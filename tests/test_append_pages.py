@@ -203,26 +203,44 @@ def test_append_pages_refusals_mutate_nothing(
     assert dup.catalog.count_rows("pages") == N1
 
 
+@pytest.mark.parametrize("crash_at", ["pairs_append", "pages_lineage"])
 def test_append_pages_crash_marker_routes_retry_to_full(
-    spark, tmp_path_factory, monkeypatch, base_catalog, full_n2
+    spark, tmp_path_factory, monkeypatch, base_catalog, full_n2, crash_at
 ):
     """A kill mid-append leaves delta.inflight up; the retry refuses and
-    run_incremental(full snapshot) heals to the full rebuild's partition."""
+    run_incremental(full snapshot) heals to the full rebuild's partition.
+    Two kill points: after the pairs append, and at the pages lineage
+    commit — the batch signing overlaps it, so the signatures lineage is
+    left AHEAD of pages."""
     from near_duplicate_detection_spark.lineage import StageCatalog
 
-    cat_dir = _copy(base_catalog, tmp_path_factory, "ndd_ap_crash")
+    cat_dir = _copy(base_catalog, tmp_path_factory, f"ndd_ap_crash_{crash_at}")
     pipe = NDDPipeline(spark, CFG, cat_dir)
     orig_write = StageCatalog.write
+    orig_mark = StageCatalog.mark_complete
 
     def write_then_crash(self, df, table, **kw):
         orig_write(self, df, table, **kw)
         if table == "pairs":
             raise RuntimeError("simulated crash mid pairs append")
 
-    monkeypatch.setattr(StageCatalog, "write", write_then_crash)
+    def mark_crash(self, stage, *a, **kw):
+        if stage == "pages":
+            raise RuntimeError("simulated crash at the pages lineage commit")
+        orig_mark(self, stage, *a, **kw)
+
+    if crash_at == "pairs_append":
+        monkeypatch.setattr(StageCatalog, "write", write_then_crash)
+    else:
+        monkeypatch.setattr(StageCatalog, "mark_complete", mark_crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         pipe.append_pages(generate_pages(spark, N2, start=N1))
     monkeypatch.setattr(StageCatalog, "write", orig_write)
+    monkeypatch.setattr(StageCatalog, "mark_complete", orig_mark)
+    if crash_at == "pages_lineage":
+        h1 = CFG.stage1_hash()
+        lineage = pipe.catalog.latest_partition_stats
+        assert lineage("signatures", h1) != lineage("pages", h1)
     assert pipe._delta_suspect()
     with pytest.raises(AppendRefusedError, match="crash marker"):
         pipe.append_pages(generate_pages(spark, N2, start=N1))
@@ -421,3 +439,29 @@ def test_append_then_delete_same_doc_restores_base(
     # the MOR retraction keeps (composes) the label patch — the displayed
     # partition above is what matters; the log must be consumed though
     assert not pipe.catalog.exists("urls_retracted")
+
+
+def test_broken_append_contract_never_commits_inflated_stats_hint(
+    spark, tmp_path_factory, base_catalog
+):
+    """append_pages does not detect a url already in the corpus (its caller
+    contract); the pages view then holds that url twice, which multiplies
+    rows in run_incremental's pure-append probe join. The probe's
+    aggregate must then not stand in for the snapshot's stats: after
+    run_incremental on a url-unique snapshot, the committed pages lineage
+    equals _input_stats of that snapshot."""
+    pipe = NDDPipeline(
+        spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_ap_hint")
+    )
+    pipe.append_pages(
+        spark.createDataFrame(
+            [(url_of(7), "a second body for a url already in the corpus")],
+            "url string, text string",
+        )
+    )
+    assert pipe.pages_table().where(F.col("url") == url_of(7)).count() == 2
+    snap = generate_pages(spark, N1)
+    pipe.run_incremental(snap)
+    assert pipe.catalog.latest_partition_stats(
+        "pages", CFG.stage1_hash()
+    ) == pipe._input_stats(snap)

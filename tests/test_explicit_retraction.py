@@ -111,6 +111,8 @@ def test_delete_pages_matches_full_rebuild_zero_resigning(
         int(m[(m.stage == "pairs") & (m.key == "retracted_docs")].value.sum())
         == len(DEL_IDS)
     )
+    tomb_rows = m[(m.stage == "pages") & (m.key == "page_tombstone_rows")]
+    assert tomb_rows.value.tolist() == [float(len(DEL_IDS))]
     # logs consumed on the clusters swap; no crash marker left behind
     for t in ("edges_new", "urls_new", "urls_retracted"):
         assert not pipe.catalog.exists(t)
@@ -253,12 +255,66 @@ def test_update_pages_matches_full_rebuild_signs_only_batch(
         int(m[(m.stage == "pairs") & (m.key == "retracted_docs")].value.sum())
         == len(edit_urls)
     )
+    for key in ("updated_docs", "page_tombstone_rows"):
+        rows = m[(m.stage == "pages") & (m.key == key)]
+        assert rows.value.tolist() == [float(len(edit_urls))], key
     # ONE clusters swap committed both halves (retraction + re-append):
     # exactly one delta metrics row, carrying both counts
     retr = m[(m.stage == "clusters") & (m.key == "delta_retracted_urls")]
     assert retr.value.tolist() == [float(len(edit_urls))]
     for t in ("edges_new", "urls_new", "urls_retracted"):
         assert not pipe.catalog.exists(t)
+
+
+def test_update_pages_crash_marker_routes_retry_to_full(
+    spark, tmp_path_factory, monkeypatch, base_catalog
+):
+    """A kill at the pages lineage commit of an update (the batch signing
+    overlaps it, so the signatures lineage is left AHEAD of pages) leaves
+    delta.inflight up: the retry refuses, and run_incremental on the
+    edited snapshot heals to a from-scratch rebuild's partition."""
+    from near_duplicate_detection_spark.lineage import StageCatalog
+
+    edit_urls = [url_of(i) for i in (20, 43, 57, 88)]
+    edited_snap = generate_pages(spark, N).withColumn(
+        "text",
+        F.when(
+            F.col("url").isin(edit_urls),
+            F.concat(F.col("text"), F.lit(" freshly edited tail")),
+        ).otherwise(F.col("text")),
+    )
+    batch = edited_snap.where(F.col("url").isin(edit_urls))
+    pipe = NDDPipeline(
+        spark, CFG, _copy(base_catalog, tmp_path_factory, "ndd_er_ucrash")
+    )
+    orig_mark = StageCatalog.mark_complete
+
+    def mark_crash(self, stage, *a, **kw):
+        if stage == "pages":
+            raise RuntimeError("simulated crash at the pages lineage commit")
+        orig_mark(self, stage, *a, **kw)
+
+    monkeypatch.setattr(StageCatalog, "mark_complete", mark_crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        pipe.update_pages(batch)
+    monkeypatch.setattr(StageCatalog, "mark_complete", orig_mark)
+    h1 = CFG.stage1_hash()
+    lineage = pipe.catalog.latest_partition_stats
+    assert lineage("signatures", h1) != lineage("pages", h1)
+    assert pipe._delta_suspect()
+    with pytest.raises(AppendRefusedError, match="crash marker"):
+        pipe.update_pages(batch)
+    healed = pipe.run_incremental(edited_snap).toPandas()
+    assert healed.url.nunique() == N
+    full = (
+        NDDPipeline(
+            spark, CFG, str(tmp_path_factory.mktemp("ndd_er_ucrash_full"))
+        )
+        .run(edited_snap)
+        .toPandas()
+    )
+    assert _partition(healed) == _partition(full)
+    assert not pipe._delta_suspect()
 
 
 def test_update_pages_refusals_mutate_nothing(

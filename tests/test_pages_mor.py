@@ -191,6 +191,10 @@ def test_ceiling_zero_restores_copy_on_write(
     assert (
         m[(m.stage == "pages") & (m.key == "buckets_rewritten")].value > 0
     ).any()
+    # the copy-on-write delete's own rows: no bucket emptied, no sidecar
+    for key in ("buckets_dropped", "page_tombstone_rows"):
+        rows = m[(m.stage == "pages") & (m.key == key)]
+        assert rows.value.tolist() == [0.0], key
 
 
 def test_ceiling_crossing_folds_stored_tombstones(
